@@ -113,9 +113,9 @@ BENCH_QUERIES = [
 # 10): the two LSH keys whose uniform n=3 left a 2× run spread unresolved
 # get n=5, visible in queries_runs.
 N_RUNS = 3
-# dedup_clusters_lsh joined the noisy set in r06: the round's rework
-# (bitmask verify + pointer jump) reaches a lower steady state (~7 s vs
-# 10.3) but compiles more distinct codegen shapes, so runs keep cooling
+# dedup_clusters_lsh joined the noisy set in r06: its pointer-jump
+# closure reaches a lower steady state (~7 s vs 10.3) but compiles more
+# distinct codegen shapes, so runs keep cooling
 # through run 3 ([31, 20, 12] measured in one pass vs [8.4, 8.3, 8.9] in
 # the next); n=5 lets cross-round comparison see the converged number,
 # same treatment the other two LSH entries have had since r02.

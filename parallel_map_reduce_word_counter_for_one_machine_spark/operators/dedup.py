@@ -16,7 +16,9 @@ The dedup tiers, all pure DataFrame/JVM expressions in the row paths
    bucket groupBy → exact-Jaccard verify. THE 100 TB near-dup path:
    candidate generation is linear + one shuffle, never all-pairs;
    ``lsh_verified_pairs`` is the exact-collapse production edge source
-   for the clustering operators (graphdedup.py).
+   for the clustering operators (graphdedup.py). Its one verify path
+   (``_jaccard_verify``) intersects distinct 64-bit token hashes, so
+   the pair semantics do not depend on the corpus vocabulary size.
 4. ``dedup_simhash``      — 64-bit SimHash + chunk-LSH + hamming verify.
 5. ``dedup_ngram_jaccard``— exact all-pairs Jaccard on token sets;
    oracle-checkable ground truth for the LSH tiers (O(n²) — test scale
@@ -29,8 +31,9 @@ The dedup tiers, all pure DataFrame/JVM expressions in the row paths
 
 MinHash math: h_i(S) = min over shingles s of xxhash64(s, seed_i); the
 band trick (b bands × r rows) makes P[candidate] ≈ 1-(1-J^r)^b — with
-b=8, r=2: J=0.8 → 0.98, J=0.3 → 0.53. Banding/verify thresholds chosen
-for the small-vocabulary synthetic corpus; both are constructor args.
+b=8, r=2: J=0.8 → 0.98, J=0.3 → 0.53. The listing tier's banding and
+verify threshold are module constants (N_HASHES, N_BANDS,
+JACCARD_THRESHOLD); the cluster-edge path has its own (CLUSTER_*).
 """
 
 from __future__ import annotations
@@ -53,6 +56,8 @@ SHINGLE_K = 3
 CLUSTER_N_HASHES = 32
 CLUSTER_N_BANDS = 16
 CLUSTER_MAX_BUCKET = 256
+# Token-set Jaccard an edge must reach (the dedup_ngram_jaccard definition).
+CLUSTER_JACCARD = 0.8
 JACCARD_THRESHOLD = 0.5
 HAMMING_MAX = 8
 # Cosine near-dup threshold. The driver's synthetic embeddings are
@@ -130,7 +135,6 @@ def minhash_signatures(
     n_hashes: int = N_HASHES,
     k: int = SHINGLE_K,
     carry: tuple = (),
-    with_size: bool = False,
 ) -> DataFrame:
     """(doc_id, sig: array<long>[n_hashes]) — MinHash over the doc's
     distinct k-token shingle set, entirely in HASH SPACE and entirely in
@@ -170,13 +174,6 @@ def minhash_signatures(
         )
     sh = F.array_distinct(F.filter(chain, lambda x: x.isNotNull()))
     hs = hw.select("doc_id", *carry, sh.alias("hs")).filter(F.size("hs") > 0)
-    if with_size:
-        # shingle-set cardinality rides along for the PPJoin size bound in
-        # lsh_candidate_pairs (size_ratio). Opt-in: pay for it only where
-        # the size distribution actually varies relative to the verify
-        # threshold (see minhash_lsh_pairs for the measured negative).
-        hs = hs.withColumn("n", F.size("hs"))
-        carry = carry + ("n",)
     return _sig_from_hash_sets(hs, n_hashes, carry=carry)
 
 
@@ -311,8 +308,13 @@ def lsh_candidate_pairs(
     size_ratio: float | None = None,
 ) -> DataFrame:
     """Band the signatures and emit unordered candidate pairs (a < b).
-    ``dedupe=False`` skips the final distinct, leaving cross-band
-    duplicates for the caller's own downstream distinct to absorb.
+    ``dedupe=False`` skips the final distinct and returns the raw
+    cross-band union, for a caller that fuses the distinct with an
+    exchange of its own (``lsh_verified_pairs`` distincts after the doc_a
+    repartition its verify join reuses). Verifying without ANY distinct
+    measured NEGATIVE at sf0.1 cluster params (interleaved A/B: 5.0 s vs
+    10.0 s end-to-end): the duplicated candidates cost ~2× through the
+    per-pair verify join, far more than the 16-byte-row distinct saves.
 
     ``size_ratio`` (requires a set-size column ``n`` on ``sigs``) applies
     the EXACT length filter of the similarity-join literature (PPJoin's
@@ -322,10 +324,6 @@ def lsh_candidate_pairs(
     zero recall loss at verify threshold t (measured at sf0.1 cluster
     params: −50% candidates, 1.31 M → 0.65 M — the corpus's mid-J mass is
     largely cross-size).
-    Measured NEGATIVE at sf0.1 cluster params (interleaved A/B: 5.0 s vs
-    10.0 s end-to-end): the duplicated candidates cost ~2× through the
-    per-pair verify join, far more than the 16-byte-row distinct saves —
-    keep the default unless the verify stage disappears entirely.
 
     Shape: explode each doc into n_bands (band_id, band_hash) keys, then
     ONE groupBy on the band key collects each bucket's doc list; pairs are
@@ -407,7 +405,7 @@ def lsh_candidate_pairs(
     # exists ONLY for over-cap sketch-sort recovery, yet it used to ride
     # through a full-stream checkpoint and the count-window shuffle+SORT of
     # EVERY banded row — ~4 GB of state at 1.5 M docs × 16 bands in one
-    # shared local[32] heap, profiled (tools/stage_profile.py) as the heart
+    # shared local[32] heap, profiled stage by stage as the heart
     # of the 16.6×-for-10×-data candidates stage. The rot-bearing stream is
     # re-derived below only for buckets that actually overflow.
     banded = sigs.select(
@@ -533,9 +531,9 @@ def _overcap_neighbor_pairs(
     filter provably does not change the candidate set while cutting the
     neighbor volume from O(N · buckets/doc · W) to O(tail · W).
 
-    Over-cap detection (r08 — the measured x100 fix, tools/
-    stage_profile.py): a PARTIAL-AGGREGABLE groupBy count (``overcap_
-    keys`` — callers that already aggregated bucket sizes pass theirs),
+    Over-cap detection (r08 — the measured x100 fix): a
+    PARTIAL-AGGREGABLE groupBy count (``overcap_keys`` — callers that
+    already aggregated bucket sizes pass theirs),
     NOT the previous whole-partition count window, which exchanged AND
     sorted every banded row of the corpus just to learn bucket sizes —
     the dominant candidates-stage cost at the 1.5 M-doc decade tier.
@@ -792,19 +790,13 @@ def dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lsh_verified_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.8,
-    n_hashes: int = CLUSTER_N_HASHES,
-    n_bands: int = CLUSTER_N_BANDS,
-    max_bucket: int = CLUSTER_MAX_BUCKET,
-    docs: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
 ) -> DataFrame:
     """PRODUCTION near-dup edge source for the clustering operators: the
     same pair semantics as the exact O(n²) truth (token-set Jaccard ≥
-    ``threshold``, the ``dedup_ngram_jaccard`` definition) computed without
-    any all-pairs join (``docs`` overrides the corpus — the incremental
-    cluster maintenance path closes over a SPLIT of the table):
+    CLUSTER_JACCARD, the ``dedup_ngram_jaccard`` definition) computed
+    without any all-pairs join (``docs`` overrides the corpus — the
+    incremental cluster maintenance path closes over a SPLIT of the table):
 
     1. Exact-collapse: group docs by an md5 fingerprint of their sorted
        distinct token set; same-fingerprint docs have J = 1.0 by definition,
@@ -813,10 +805,12 @@ def lsh_verified_pairs(
        is the standard scale move — exact dup mass (the bulk at 100 TB)
        never reaches the quadratic-ish stage.
     2. Token-set MinHash over representatives → band buckets → in-bucket
-       pair enumeration (``lsh_candidate_pairs``, bucket-capped).
-    3. Exact-Jaccard verify of candidates at ``threshold`` — precision 1.0
-       vs the truth by construction; recall set by (n_hashes, n_bands,
-       max_bucket), closure-equality-tested at the defaults.
+       pair enumeration (``lsh_candidate_pairs``, bucket-capped), then one
+       cross-band distinct.
+    3. Exact-Jaccard verify of candidates (``_jaccard_verify``, on distinct
+       64-bit token hashes) — precision 1.0 vs the truth by construction;
+       recall set by CLUSTER_N_HASHES / CLUSTER_N_BANDS /
+       CLUSTER_MAX_BUCKET, closure-equality-tested.
 
     Empty-token docs are excluded (their truth Jaccard is NULL — never a
     pair), so md5('') cannot weld unrelated empty docs together.
@@ -847,73 +841,41 @@ def lsh_verified_pairs(
         F.col("rep").alias("doc_id"), "toks", F.size("toks").alias("n")
     )
     sigs = _signatures_of_sets(
-        reps.withColumnRenamed("toks", "elems"), n_hashes, carry=("n",)
+        reps.withColumnRenamed("toks", "elems"), CLUSTER_N_HASHES, carry=("n",)
     )
-    # Verify representation is ADAPTIVE on vocabulary size (one bounded
-    # limit(64) driver probe): when the rep vocabulary fits in 63 bits,
-    # each token set dictionary-encodes into ONE BIGINT and the per-pair
-    # |A∩B| / |A∪B| are two bit_count() calls in whole-stage codegen —
-    # EXACT set semantics with no 64-bit-collision caveat at all, and
-    # ~3× cheaper than per-element array intersection. Natural-language
-    # corpora blow past 63 distinct tokens and take the general path
-    # (the bitmask form generalizes to k longs for V ≤ 64k, but the
-    # fallback already scales, so one word is all we keep).
-    small_vocab = _small_vocab(reps)
-    bitmask_verify = small_vocab is not None
-    # size_ratio=threshold: the exact PPJoin length bound (J ≤ min/max)
-    # drops cross-size candidates inside the bucket enumeration — measured
-    # −50% candidates at sf0.1 with provably zero recall loss at t=0.8.
-    # dedupe flips with the verify cost (A/B'd at sf0.1): bit-op verify is
-    # so cheap that pushing ~1.1 M cross-band duplicate candidates through
-    # it and distinct-ing the VERIFIED set beats a 0.65 M-row pre-verify
-    # distinct (−1.7 s); with the heavier array verify the r04 measurement
-    # stands and the pre-verify distinct stays.
+    # size_ratio: the exact PPJoin length bound (J ≤ min/max) drops
+    # cross-size candidates inside the bucket enumeration — measured −50%
+    # candidates at sf0.1 with provably zero recall loss at t=0.8.
     cands = lsh_candidate_pairs(
         sigs,
-        n_bands=n_bands,
-        n_hashes=n_hashes,
-        max_bucket=max_bucket,
-        size_ratio=threshold,
+        n_bands=CLUSTER_N_BANDS,
+        n_hashes=CLUSTER_N_HASHES,
+        max_bucket=CLUSTER_MAX_BUCKET,
+        size_ratio=CLUSTER_JACCARD,
         dedupe=False,
     )
-    if not bitmask_verify:
-        # ONE exchange serves both the cross-band dedupe and verify join 1
-        # (r08, second-decade fix): hash-partitioning by doc_a ALONE
-        # satisfies the distinct's (doc_a, doc_b) clustering requirement
-        # (identical pairs share doc_a — Spark's subset rule; plan-checked:
-        # partial+final HashAggregate with no second exchange) and is
-        # exactly the distribution verify join 1 requires, so the
-        # (a,b)-keyed distinct exchange of the ~10-bands-per-pair
-        # candidate stream disappears. The bitmask path keeps its
-        # measured no-pre-distinct economics (bit-op verify is cheaper
-        # than the dedupe, r04 A/B).
-        cands = cands.repartition("doc_a").distinct()
-    verified = _jaccard_verify(reps, cands, threshold, small_vocab)
-    out = star.union(verified)
-    # On the array-verify path the final distinct is PROVABLY redundant —
-    # and one less 35 M-row exchange at the x100 decade (r08): star and
-    # verified are DISJOINT (a star edge's doc_b is a non-rep member,
-    # and only reps appear in candidates), star is unique by construction
-    # (one row per (group, member)), and verified is unique because the
-    # pre-verify distinct made cands unique and the verify joins are 1:1
-    # on a unique-keyed reps relation. The bitmask path skips the
-    # pre-verify distinct (measured cheaper), so ITS duplicates are
-    # collapsed here as before.
-    return out.distinct() if bitmask_verify else out
+    # ONE exchange serves both the cross-band dedupe and verify join 1:
+    # hash-partitioning by doc_a ALONE satisfies the distinct's (doc_a,
+    # doc_b) clustering requirement (identical pairs share doc_a — Spark's
+    # subset rule; plan-checked: partial+final HashAggregate with no
+    # second exchange) and is exactly the distribution verify join 1
+    # requires, so the (a,b)-keyed distinct exchange of the
+    # ~10-bands-per-pair candidate stream disappears.
+    cands = cands.repartition("doc_a").distinct()
+    verified = _jaccard_verify(reps, cands, CLUSTER_JACCARD)
+    # No final distinct: star and verified are DISJOINT (a star edge's
+    # doc_b is a non-rep member, and only reps appear in candidates), star
+    # is unique by construction (one row per (group, member)), and
+    # verified is unique because the distinct above made cands unique and
+    # the verify joins are 1:1 on a unique-keyed reps relation.
+    return star.union(verified)
 
 
-def incremental_cluster_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.8,
-    n_hashes: int = CLUSTER_N_HASHES,
-    n_bands: int = CLUSTER_N_BANDS,
-    max_bucket: int = CLUSTER_MAX_BUCKET,
-) -> DataFrame:
+def incremental_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH-INCIDENT near-dup edges for incremental cluster maintenance
     (graphdedup.dedup_clusters_incremental): every verified pair with at
     least one endpoint in the incoming batch (doc_id % INCREMENTAL_MOD ==
-    0), at the same token-set-Jaccard ≥ ``threshold`` semantics as
+    0), at the same token-set-Jaccard ≥ CLUSTER_JACCARD semantics as
     ``lsh_verified_pairs`` — the shared ``_jaccard_verify`` makes drift
     impossible.
 
@@ -945,24 +907,26 @@ def incremental_cluster_pairs(
         F.col("rep").alias("doc_id"), "toks", F.size("toks").alias("n")
     )
     ssigs = _signatures_of_sets(
-        sreps.withColumnRenamed("toks", "elems"), n_hashes, carry=("n",)
+        sreps.withColumnRenamed("toks", "elems"), CLUSTER_N_HASHES, carry=("n",)
     )
     index = (
-        banded_keys(ssigs, n_bands, n_hashes, carry=("n",))
+        banded_keys(ssigs, CLUSTER_N_BANDS, CLUSTER_N_HASHES, carry=("n",))
         .groupBy("band_id", "band_hash")
         .agg(
             F.slice(
                 F.array_sort(F.collect_list(F.struct("doc_id", "n"))),
                 1,
-                max_bucket,
+                CLUSTER_MAX_BUCKET,
             ).alias("docs")
         )
     )
     brel = batch.withColumn("n", F.size("toks"))
     bsigs = _signatures_of_sets(
-        brel.withColumnRenamed("toks", "elems"), n_hashes, carry=("n",)
+        brel.withColumnRenamed("toks", "elems"), CLUSTER_N_HASHES, carry=("n",)
     ).localCheckpoint()  # two consumers: the probe stream + batch↔batch
-    probes = banded_keys(bsigs, n_bands, n_hashes, carry=("n",)).select(
+    probes = banded_keys(
+        bsigs, CLUSTER_N_BANDS, CLUSTER_N_HASHES, carry=("n",)
+    ).select(
         F.col("doc_id").alias("doc_a"), F.col("n").alias("na"),
         "band_id", "band_hash",
     )
@@ -973,87 +937,50 @@ def incremental_cluster_pairs(
         # float rounding at exact-ratio boundaries, erring toward keep)
         .filter(
             F.least("na", F.col("m.n")).cast("double")
-            >= F.lit(threshold) * F.greatest("na", F.col("m.n")) - F.lit(1e-9)
+            >= F.lit(CLUSTER_JACCARD) * F.greatest("na", F.col("m.n"))
+            - F.lit(1e-9)
         )
         .select("doc_a", F.col("m.doc_id").alias("doc_b"))
         .distinct()
     )
     relation = sreps.unionByName(brel.select("doc_id", "toks", "n"))
-    # same dedupe economics as lsh_verified_pairs: skip the pre-verify
-    # distinct only when the verify is bit-ops
-    small_vocab = _small_vocab(relation)
     within = lsh_candidate_pairs(
         bsigs,
-        n_bands=n_bands,
-        n_hashes=n_hashes,
-        max_bucket=max_bucket,
-        size_ratio=threshold,
-        dedupe=small_vocab is None,
+        n_bands=CLUSTER_N_BANDS,
+        n_hashes=CLUSTER_N_HASHES,
+        max_bucket=CLUSTER_MAX_BUCKET,
+        size_ratio=CLUSTER_JACCARD,
     )
     verified = _jaccard_verify(
-        relation, cross.unionByName(within), threshold, small_vocab
+        relation, cross.unionByName(within), CLUSTER_JACCARD
     )
     return verified.distinct()
 
 
-def _small_vocab(relation: DataFrame) -> list | None:
-    """The ≤63-token vocabulary of a (doc_id, toks, n) relation, or None
-    when it doesn't fit one long — ONE bounded limit(64) driver probe."""
-    probe = (
-        relation.select(F.explode("toks").alias("tok"))
-        .distinct()
-        .limit(64)
-        .collect()
-    )
-    return sorted(r.tok for r in probe) if len(probe) <= 63 else None
-
-
 def _jaccard_verify(
-    relation: DataFrame,
-    cands: DataFrame,
-    threshold: float,
-    small_vocab: list | None,
+    relation: DataFrame, cands: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact token-set Jaccard ≥ threshold filter of a candidate pair list
-    against a (doc_id, toks array_distinct'd, n) relation. Representation
-    per ``small_vocab`` (see lsh_verified_pairs): one-BIGINT dictionary
-    bitmask when the vocabulary fits 63 bits, hashed-long arrays otherwise.
-    Shared by the full edge source and the incremental maintenance path so
-    their pair semantics cannot drift."""
-    if small_vocab is not None:
-        tok_bit = F.create_map(
-            *[
-                c
-                for i, t in enumerate(small_vocab)
-                for c in (F.lit(t), F.lit(1 << i))  # token → its bit, as a long
-            ]
-        )
-        mask = F.aggregate(
-            F.transform("toks", lambda t: F.element_at(tok_bit, t)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc.bitwiseOR(x),
-        )
-        repv = relation.select("doc_id", mask.alias("mk"))
-        a, b = repv.alias("a"), repv.alias("b")
-        inter = F.bit_count(F.col("a.mk").bitwiseAND(F.col("b.mk")))
-        union = F.bit_count(F.col("a.mk").bitwiseOR(F.col("b.mk")))
-    else:
-        # Verify intersects 64-bit TOKEN HASHES, not token strings: the
-        # verify join is the hot loop and per-element long compares
-        # measured 2.5× faster than string compares with identical output
-        # (A/B'd: same 116,472 pairs). |A∩B| on xxhash64'd distinct tokens
-        # equals |A∩B| on the tokens themselves unless two DISTINCT
-        # vocabulary tokens collide in 64 bits — P ≈ |vocab|²/2⁶⁵, and a
-        # collision only shifts one pair's Jaccard by ~1/|A∪B|.
-        # |A∪B| = |A|+|B|−|A∩B| — EXACT because toks is array_distinct'd.
-        reph = relation.select(
-            "doc_id",
-            F.transform("toks", lambda t: F.xxhash64(t)).alias("th"),
-            "n",
-        )
-        a, b = reph.alias("a"), reph.alias("b")
-        inter = F.size(F.array_intersect(F.col("a.th"), F.col("b.th")))
-        union = F.col("a.n") + F.col("b.n") - inter
+    against a (doc_id, toks array_distinct'd, n) relation. Shared by the
+    full edge source and the incremental maintenance path so their pair
+    semantics cannot drift.
+
+    Verify intersects 64-bit TOKEN HASHES, not token strings: the verify
+    join is the hot loop and per-element long compares measured 2.5×
+    faster than string compares with identical output (A/B'd: same
+    116,472 pairs). |A∩B| on xxhash64'd distinct tokens equals |A∩B| on
+    the tokens themselves unless two DISTINCT vocabulary tokens collide in
+    64 bits — P ≈ |vocab|²/2⁶⁵, and a collision only shifts one pair's
+    Jaccard by ~1/|A∪B|. |A∪B| = |A|+|B|−|A∩B| — EXACT because toks is
+    array_distinct'd."""
+    reph = relation.select(
+        "doc_id",
+        F.transform("toks", lambda t: F.xxhash64(t)).alias("th"),
+        "n",
+    )
+    a, b = reph.alias("a"), reph.alias("b")
+    inter = F.size(F.array_intersect(F.col("a.th"), F.col("b.th")))
+    union = F.col("a.n") + F.col("b.n") - inter
     jac = F.when(union > 0, inter.cast("double") / union)
     return (
         cands.join(a, cands.doc_a == F.col("a.doc_id"))

@@ -41,6 +41,9 @@ from ..sources.tables import load_table
 from .dedup import INCREMENTAL_MOD, dedup_ngram_jaccard, lsh_verified_pairs
 
 MAX_ROUNDS = 15
+# Propagation steps between materialization + convergence-check barriers
+# (see label_propagation).
+STEPS_PER_CHECK = 2
 
 # Compose the oracle from the registered pair oracle so the edge definition
 # cannot drift from dedup_ngram_jaccard's (dedup.py is imported above, so
@@ -70,9 +73,7 @@ def _sym_edges(pairs: DataFrame) -> DataFrame:
     ).toDF("src", "dst")
 
 
-def label_propagation(
-    edges: DataFrame, max_rounds: int = MAX_ROUNDS, steps_per_check: int = 2
-) -> DataFrame:
+def label_propagation(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> DataFrame:
     """Min-label propagation over a symmetric (src, dst) edge list →
     (node, label) with label = component min. Labels only ever decrease, so
     sum(label) is strictly monotone until the fixpoint — a single scalar
@@ -81,11 +82,11 @@ def label_propagation(
     max_rounds), falls back to ``connected_components_star`` rather than
     returning partially-propagated (wrong) labels.
 
-    ``steps_per_check`` propagation steps run between materialization +
+    STEPS_PER_CHECK propagation steps run between materialization +
     convergence-check barriers (r03, VERDICT item 7): the r02 profile
     showed the sf0.1 cost dominated by per-round localCheckpoint/collect
     stage barriers on a noisy box, not by shuffle volume. Batching halves
-    the barrier count; the price is up to ``steps_per_check - 1`` extra
+    the barrier count; the price is up to STEPS_PER_CHECK - 1 extra
     propagation shuffles over already-converged (small, label-stable)
     state after the true fixpoint."""
     edges = edges.localCheckpoint()
@@ -98,7 +99,7 @@ def label_propagation(
     prev_sum = None
     steps = 0
     while steps < max_rounds:
-        for _ in range(min(steps_per_check, max_rounds - steps)):
+        for _ in range(min(STEPS_PER_CHECK, max_rounds - steps)):
             # FUSED propagate + pointer jump (optimization r12, guide
             # §2.4 — one join + one aggregate per step instead of two
             # joins): the jump label ← label(label) is itself a

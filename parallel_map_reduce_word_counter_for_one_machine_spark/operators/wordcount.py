@@ -261,9 +261,9 @@ ALPHA_HEADER = "=== Final Word Counts (A → Z) ==="
 BY_COUNT_HEADER = "=== Final Word Counts (High → Low) ==="
 
 
-def listing_lines(counts: DataFrame, order_cols, header: str | None) -> DataFrame:
+def listing_lines(counts: DataFrame, order_cols, header: str) -> DataFrame:
     """One sorted ``word -> count`` listing as DataFrame[line: string],
-    optionally preceded by the reference's header line. The header is a
+    preceded by the reference's header line. The header is a
     synthetic row with sort key 0 unioned ahead of the body (key 1): the
     range-partitioned sort places it in the first output split, so a
     distributed ``.text()`` write concatenates to exactly the reference's
@@ -273,8 +273,6 @@ def listing_lines(counts: DataFrame, order_cols, header: str | None) -> DataFram
         F.lit(1).alias("_h"), "word", F.col("cnt").cast("long").alias("cnt"),
         line.alias("line"),
     )
-    if header is None:
-        return body.orderBy(*order_cols).select("line")
     head = counts.sparkSession.range(1).select(
         F.lit(0).alias("_h"),
         F.lit("").alias("word"),
@@ -284,26 +282,24 @@ def listing_lines(counts: DataFrame, order_cols, header: str | None) -> DataFram
     return head.unionByName(body).orderBy("_h", *order_cols).select("line")
 
 
-def write_listings(
-    spark: SparkSession, sf_dir: str, out_dir: str, headers: bool = True
-) -> None:
-    """Both reference sinks end-to-end: alpha listing → ``alpha/``, frequency
-    listing → ``by_count/`` (reference output.txt / output2.txt,
-    src/main.cpp:226-266), including the header lines (src/main.cpp:231,
-    :262) unless ``headers=False``. Distributed text write — one file per
+def write_count_listings(counts: DataFrame, out_dir: str) -> None:
+    """Both reference sinks for a (word, cnt) table: alpha listing →
+    ``alpha/``, frequency listing → ``by_count/`` (reference output.txt /
+    output2.txt, src/main.cpp:226-266), each with its header line
+    (src/main.cpp:231, :262). Distributed text write — one file per
     partition; a 100 TB listing never funnels through the driver."""
-    wc = word_counts(spark, sf_dir)
-    (
-        listing_lines(wc, [F.asc("word")], ALPHA_HEADER if headers else None)
-        .write.mode("overwrite")
-        .text(f"{out_dir}/alpha")
-    )
-    (
-        listing_lines(
-            wc,
-            [F.desc("cnt"), F.asc("word")],
-            BY_COUNT_HEADER if headers else None,
+    for sub, order_cols, header in (
+        ("alpha", [F.asc("word")], ALPHA_HEADER),
+        ("by_count", [F.desc("cnt"), F.asc("word")], BY_COUNT_HEADER),
+    ):
+        (
+            listing_lines(counts, order_cols, header)
+            .write.mode("overwrite")
+            .text(f"{out_dir}/{sub}")
         )
-        .write.mode("overwrite")
-        .text(f"{out_dir}/by_count")
-    )
+
+
+def write_listings(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
+    """Both reference sinks end-to-end over the documents table's word
+    counts (``write_count_listings``)."""
+    write_count_listings(word_counts(spark, sf_dir), out_dir)

@@ -21,8 +21,8 @@ Scale notes (100 TB):
   part/supplier) stay broadcast-able even at SF100k; fact-fact joins
   shuffle on join keys.
 - ``spark.sql.adaptive.shuffledHashJoinLocalMapThreshold`` is deliberately
-  left at its 0 default (r08, MEASURED — tools/verify_ab.py): converting
-  the second-decade LSH verify's SMJ to a shuffled hash join looked like
+  left at its 0 default (r08, MEASURED): converting the second-decade
+  LSH verify's SMJ to a shuffled hash join looked like
   the obvious sort-elimination win, but at 64 MB the conversion OOMed the
   x100 tier — AQE first coalesces shuffle partitions toward 64 MB, so
   each SHJ task builds a ~64 MB hash relation (3-5× in-memory

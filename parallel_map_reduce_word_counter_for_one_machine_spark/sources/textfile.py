@@ -18,12 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.wordcount import (
-    ALPHA_HEADER,
-    BY_COUNT_HEADER,
-    REF_DELIM_REGEX,
-    listing_lines,
-)
+from ..operators.wordcount import tokenize_ref, write_count_listings
 
 
 def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -32,7 +27,7 @@ def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
 
 
 def run_reference_pipeline(
-    spark: SparkSession, in_path: str, out_dir: str, headers: bool = True
+    spark: SparkSession, in_path: str, out_dir: str
 ) -> DataFrame:
     """The reference program end-to-end (src/main.cpp:78-281), Spark-first:
 
@@ -46,25 +41,10 @@ def run_reference_pipeline(
     Difference by design (SURVEY.md §4): frequency ties are pinned to
     (cnt DESC, word ASC) where the reference is unstable-sort-unspecified.
     """
-    lines = read_text_lines(spark, in_path)
     counts = (
-        lines.select(F.explode(F.split("value", REF_DELIM_REGEX)).alias("word"))
-        .filter(F.col("word") != "")
+        tokenize_ref(read_text_lines(spark, in_path), "value")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    (
-        listing_lines(counts, [F.asc("word")], ALPHA_HEADER if headers else None)
-        .write.mode("overwrite")
-        .text(f"{out_dir}/alpha")
-    )
-    (
-        listing_lines(
-            counts,
-            [F.desc("cnt"), F.asc("word")],
-            BY_COUNT_HEADER if headers else None,
-        )
-        .write.mode("overwrite")
-        .text(f"{out_dir}/by_count")
-    )
+    write_count_listings(counts, out_dir)
     return counts

@@ -502,66 +502,13 @@ def test_size_bound_keeps_exact_threshold_ratio_pairs(spark):
     assert (1, 3) not in cands and (2, 3) not in cands
 
 
-def test_bitmask_verify_equals_array_verify(spark, sf_correct):
-    """The two verify representations are the SAME function: forcing the
-    hash-array path over the identical candidate set must produce the
-    identical verified pair set the bitmask path produces (the adaptive
-    switch is an optimization, never a semantics change)."""
-    from pyspark.sql import functions as F
-
-    from parallel_map_reduce_word_counter_for_one_machine_spark.operators.dedup import (
-        CLUSTER_MAX_BUCKET,
-        CLUSTER_N_BANDS,
-        CLUSTER_N_HASHES,
-        _jaccard_verify,
-        _signatures_of_sets,
-        _small_vocab,
-        _tokens,
-        lsh_candidate_pairs,
-    )
-    from parallel_map_reduce_word_counter_for_one_machine_spark.sources.tables import (
-        load_table,
-    )
-
-    docs = load_table(spark, sf_correct, "documents")
-    toks = docs.select(
-        "doc_id", F.array_sort(F.array_distinct(_tokens())).alias("toks")
-    ).filter(F.size("toks") > 0)
-    rel = toks.withColumn("n", F.size("toks")).localCheckpoint()
-    sigs = _signatures_of_sets(
-        rel.withColumnRenamed("toks", "elems"), CLUSTER_N_HASHES, carry=("n",)
-    )
-    cands = lsh_candidate_pairs(
-        sigs,
-        n_bands=CLUSTER_N_BANDS,
-        n_hashes=CLUSTER_N_HASHES,
-        max_bucket=CLUSTER_MAX_BUCKET,
-        size_ratio=0.8,
-    ).localCheckpoint()
-    vocab = _small_vocab(rel)
-    assert vocab is not None, "corpus vocabulary outgrew the bitmask tier"
-    via_mask = {
-        (r.doc_a, r.doc_b)
-        for r in _jaccard_verify(rel, cands, 0.8, vocab).collect()
-    }
-    via_array = {
-        (r.doc_a, r.doc_b)
-        for r in _jaccard_verify(rel, cands, 0.8, None).collect()
-    }
-    assert via_mask == via_array and via_mask
-
-
-@pytest.mark.parametrize("v_size", [63, 64, 65])
-def test_bitmask_verify_boundary(spark, v_size):
-    """The adaptive-verify switch point (VERDICT r06 item 7): vocabularies
-    of exactly 63/64/65 tokens straddle the one-BIGINT bitmask capacity.
-    ``_small_vocab`` must choose the bitmask form iff V ≤ 63 (bit 62 is
-    the last sign-safe bit), and BOTH verify representations must emit the
-    exact same pair set as a set-algebra Python twin — including planted
-    pairs that sit exactly ON the 0.8 threshold and a doc that uses every
-    vocabulary slot (bit 62 set on the 63-token side of the switch)."""
+def test_jaccard_verify_boundary(spark):
+    """``_jaccard_verify`` must emit exactly the pair set of its
+    set-algebra Python twin — including planted pairs that sit exactly ON
+    the 0.8 threshold and a doc that uses every vocabulary token."""
     import random
 
+    v_size = 64
     vocab = [f"t{i:03d}" for i in range(v_size)]
     rng = random.Random(v_size * 1000 + 7)
     rows = []
@@ -571,17 +518,13 @@ def test_bitmask_verify_boundary(spark, v_size):
     # exact-threshold pair: J(4-set, 5-superset) = 4/5 = 0.8 precisely
     rows.append((100, sorted(vocab[:4])))
     rows.append((101, sorted(vocab[:5])))
-    # full-vocabulary doc: exercises the highest bit the mask can hold
+    # full-vocabulary doc and its one-token-short neighbour
     rows.append((102, sorted(vocab)))
     rows.append((103, sorted(vocab[: v_size - 1])))
     rel = spark.createDataFrame(
         [(d, t, len(t)) for d, t in rows],
         "doc_id LONG, toks ARRAY<STRING>, n INT",
     )
-    sv = D._small_vocab(rel)
-    assert (sv is not None) == (v_size <= 63)
-    if sv is not None:
-        assert sv == vocab  # sorted, complete, bit-stable
 
     ids = [d for d, _ in rows]
     cands = spark.createDataFrame(
@@ -595,36 +538,28 @@ def test_bitmask_verify_boundary(spark, v_size):
         for b in ids[i + 1 :]
         if len(tokmap[a] & tokmap[b]) / len(tokmap[a] | tokmap[b]) >= 0.8
     )
-    assert truth, "fixture must plant at least one qualifying pair"
-
-    def verified(small_vocab):
-        return sorted(
-            map(tuple, D._jaccard_verify(rel, cands, 0.8, small_vocab).collect())
-        )
-
-    # the hash-array path is the always-valid reference; the bitmask path
-    # must agree with it (and with the twin) wherever it is eligible
-    assert verified(None) == truth
-    if sv is not None:
-        assert verified(sv) == truth
+    assert (100, 101) in truth and (102, 103) in truth
+    got = sorted(map(tuple, D._jaccard_verify(rel, cands, 0.8).collect()))
+    assert got == truth
 
 
-def test_array_verify_path_unique_pairs_and_exact_closure(spark, tmp_path):
-    """r08: the array-verify (vocab > 63) path dropped its final
-    pair-distinct — star and verified are disjoint and each internally
-    unique once candidates are pre-distinct'd — and reuses ONE doc_a
-    exchange for dedupe + verify join 1. The plain sf fixtures all fit
-    the 63-bit bitmask, so this builds a >63-token corpus with planted
-    exact dups and near-dup families and asserts (a) the emitted pair
-    list is duplicate-free WITHOUT a distinct, (b) the LSH closure
-    equals the exact O(n^2) truth closure."""
+def test_array_verify_path_unique_pairs_and_exact_closure(
+    spark, sf_correct, tmp_path
+):
+    """``lsh_verified_pairs`` has no final pair-distinct — star and
+    verified are disjoint and each internally unique once candidates are
+    pre-distinct'd — and reuses ONE doc_a exchange for dedupe + verify
+    join 1. This builds an 80-token corpus with planted exact dups and
+    near-dup families and asserts (a) the emitted pair list is
+    duplicate-free WITHOUT a distinct, on it and on the 31-word
+    ``sf_correct`` corpus, (b) the LSH closure equals the exact O(n^2)
+    truth closure."""
     import os
     import random
 
     import duckdb
 
     from parallel_map_reduce_word_counter_for_one_machine_spark.operators.dedup import (
-        _small_vocab,
         lsh_verified_pairs,
     )
     from parallel_map_reduce_word_counter_for_one_machine_spark.operators.graphdedup import (
@@ -636,7 +571,7 @@ def test_array_verify_path_unique_pairs_and_exact_closure(spark, tmp_path):
     )
 
     rng = random.Random(11)
-    vocab = [f"t{i:02d}" for i in range(80)]  # 80 > 63: forces hash-array
+    vocab = [f"t{i:02d}" for i in range(80)]
     rows, did = [], 0
     for fam in range(12):
         base = rng.sample(vocab, 30)
@@ -677,23 +612,12 @@ def test_array_verify_path_unique_pairs_and_exact_closure(spark, tmp_path):
     )
     con.close()
 
-    from pyspark.sql import functions as F
-
-    from parallel_map_reduce_word_counter_for_one_machine_spark.sources.tables import (
-        load_table,
-    )
-
-    docs = load_table(spark, d, "documents")
-    toks_rel = docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(F.split("text", " "))).alias("toks"),
-        F.size(F.array_distinct(F.split("text", " "))).alias("n"),
-    )
-    assert _small_vocab(toks_rel) is None, "fixture must exceed 63 tokens"
-
-    pairs = lsh_verified_pairs(spark, d).localCheckpoint()
-    n, nd = pairs.count(), pairs.distinct().count()
-    assert n == nd > 0, f"duplicate pairs emitted: {n} rows, {nd} distinct"
+    for corpus in (d, sf_correct):
+        pairs = lsh_verified_pairs(spark, corpus).localCheckpoint()
+        n, nd = pairs.count(), pairs.distinct().count()
+        assert n == nd > 0, (
+            f"{corpus}: duplicate pairs emitted: {n} rows, {nd} distinct"
+        )
 
     got = {
         (r.doc_id, r.cluster_id) for r in dedup_clusters(spark, d).collect()

@@ -15,9 +15,7 @@ ratio, so the number is box-independent:
   reproduces the base corpus's internal near-dup families in its own
   token universe (10× docs ⇒ 10× families ⇒ ~10× candidate pairs — the
   realistic growth axis; family-SIZE growth is the skew gate's axis,
-  BULK_r6's welded giant component). Base is 3 copies so BOTH tiers'
-  vocabularies exceed 63 tokens and take the hash-array verify (the
-  bitmask fast path would make the base tier incomparably cheap).
+  BULK_r6's welded giant component). Base is 3 copies.
   Correctness at both tiers: algorithm diversity (label-prop closure ==
   large-star/small-star closure over the same verified edges, checked
   DISTRIBUTED), every verified edge intra-cluster, cluster_id = min
@@ -283,7 +281,7 @@ def _make_session(shuffle_partitions: int | None = None, extra_conf: dict | None
         .config("spark.ui.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # NO shuffledHashJoinLocalMapThreshold: measured OOM at the x100
-        # tier (tools/verify_ab.py — see session.py's scale note)
+        # tier (see session.py's scale note)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
