@@ -2,8 +2,8 @@
 
 The reference pipeline is: text line scan → tokenize (flatMap) → empty-token
 filter → per-thread partial hash agg → striped-lock merge (hash-partitioned
-final agg) → parallel merge sort (alpha, then by count desc) → formatted
-text sinks (reference src/main.cpp:78-281).
+final agg) → parallel merge sort of that one map (alpha, then by count
+desc) → formatted text sinks (reference src/main.cpp:78-281).
 
 Spark-first re-expression — each stage maps to a declarative op and Catalyst
 plans the physical strategy the reference hand-coded:
@@ -14,7 +14,9 @@ plans the physical strategy the reference hand-coded:
 - striped-lock merge   → ``Exchange hashpartitioning(word)`` + final agg —
   Spark's shuffle gives disjoint per-partition state, the sound version of
   the reference's racy striped-lock global map (src/main.cpp:118-138)
-- parallel merge sort  → range-partitioned ``orderBy`` (sampled boundaries)
+- parallel merge sort  → the aggregate materialized once, then two
+  concurrent sorted sinks over it, each a range-partitioned ``orderBy``
+  (sampled boundaries) — ``write_count_listings``
 - ``word -> count``    → ``format_string`` projection
 
 Tokenizer parity (SURVEY.md §1, verified against the compiled reference):
@@ -38,8 +40,11 @@ future workload disables partial agg).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..registry import query
 from ..sources.tables import load_table
@@ -263,8 +268,9 @@ BY_COUNT_HEADER = "=== Final Word Counts (High → Low) ==="
 
 def listing_lines(counts: DataFrame, order_cols, header: str) -> DataFrame:
     """One sorted ``word -> count`` listing as DataFrame[line: string],
-    preceded by the reference's header line. The header is a
-    synthetic row with sort key 0 unioned ahead of the body (key 1): the
+    preceded by the reference's header line. The header is a synthetic
+    one-partition row (no empty tasks in the sort's sample and map stages)
+    with sort key 0 unioned ahead of the body (key 1): the
     range-partitioned sort places it in the first output split, so a
     distributed ``.text()`` write concatenates to exactly the reference's
     file shape — no coalesce(1) driver funnel needed."""
@@ -273,7 +279,7 @@ def listing_lines(counts: DataFrame, order_cols, header: str) -> DataFrame:
         F.lit(1).alias("_h"), "word", F.col("cnt").cast("long").alias("cnt"),
         line.alias("line"),
     )
-    head = counts.sparkSession.range(1).select(
+    head = counts.sparkSession.range(0, 1, 1, 1).select(
         F.lit(0).alias("_h"),
         F.lit("").alias("word"),
         F.lit(0).cast("long").alias("cnt"),
@@ -282,21 +288,50 @@ def listing_lines(counts: DataFrame, order_cols, header: str) -> DataFrame:
     return head.unionByName(body).orderBy("_h", *order_cols).select("line")
 
 
-def write_count_listings(counts: DataFrame, out_dir: str) -> None:
+def write_count_listings(counts: DataFrame, out_dir: str) -> DataFrame:
     """Both reference sinks for a (word, cnt) table: alpha listing →
     ``alpha/``, frequency listing → ``by_count/`` (reference output.txt /
     output2.txt, src/main.cpp:226-266), each with its header line
     (src/main.cpp:231, :262). Distributed text write — one file per
-    partition; a 100 TB listing never funnels through the driver."""
-    for sub, order_cols, header in (
-        ("alpha", [F.asc("word")], ALPHA_HEADER),
-        ("by_count", [F.desc("cnt"), F.asc("word")], BY_COUNT_HEADER),
-    ):
+    partition; a 100 TB listing never funnels through the driver.
+
+    Counts once, sorts twice: the reference builds one global word map
+    (src/main.cpp:122-138) and sorts that map into each listing
+    (src/main.cpp:221-234, :247-266). Here ``counts`` is materialized once
+    (eager ``localCheckpoint``, MEMORY_AND_DISK, sized by distinct words,
+    not by input), then the two sinks are submitted from two driver threads
+    so their range sorts share the executor cores instead of running
+    back to back. Each thread inherits the caller's job group and local
+    properties; a failure in either sink raises out of this call. Returns
+    the materialized counts, so a caller that collects them rescans
+    nothing.
+
+    Scale note: both range sorts hold execution memory at the same time,
+    and both spill (external sort) when it runs short, so the concurrency
+    costs no correctness at any vocabulary size, only a larger peak."""
+    counts = counts.localCheckpoint()
+
+    def sink(sub: str, order_cols, header: str) -> None:
         (
             listing_lines(counts, order_cols, header)
             .write.mode("overwrite")
             .text(f"{out_dir}/{sub}")
         )
+
+    # One wrap per sink: each wrap clones the caller's local properties, and
+    # the two sinks must not share one copy (each write's SQL execution
+    # stores its own execution id there).
+    with ThreadPoolExecutor(2) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(counts.sparkSession)(sink), *args)
+            for args in (
+                ("alpha", [F.asc("word")], ALPHA_HEADER),
+                ("by_count", [F.desc("cnt"), F.asc("word")], BY_COUNT_HEADER),
+            )
+        ]
+        for f in futures:
+            f.result()
+    return counts
 
 
 def write_listings(spark: SparkSession, sf_dir: str, out_dir: str) -> None:

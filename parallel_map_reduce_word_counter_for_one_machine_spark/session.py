@@ -1,6 +1,8 @@
 """SparkSession construction tuned for the two regimes we care about:
 
-1. local[32] test/bench runs (this container), and
+1. single-machine ``local[N]`` runs — N is ``cpus``, else
+   ``SPARK_GRAFT_CPUS``, else 32; the test suite uses ``cpus=8`` and the
+   benchmark (perfbench/run.py) ``os.cpu_count()`` — and
 2. the 1000-executor / 100 TB deployment the design targets.
 
 Only (1) is constructed here; (2) is documented so the same code ships

@@ -31,12 +31,14 @@ def run_reference_pipeline(
 ) -> DataFrame:
     """The reference program end-to-end (src/main.cpp:78-281), Spark-first:
 
-    text scan → reference-parity tokenize → groupBy count →
-    alpha listing → ``{out_dir}/alpha`` ; frequency listing →
-    ``{out_dir}/by_count``; returns the counts DataFrame. Header lines
-    match the reference byte-for-byte (src/main.cpp:231, :262) —
-    tests/test_textfile_stateful.py diffs the alpha listing against the
-    compiled reference binary's output.txt.
+    text scan → reference-parity tokenize → groupBy count, materialized
+    once → alpha listing → ``{out_dir}/alpha`` and frequency listing →
+    ``{out_dir}/by_count``, written concurrently (``write_count_listings``).
+    Returns the materialized counts: collecting them reads the checkpoint,
+    not the text file. Header lines match the reference byte-for-byte
+    (src/main.cpp:231, :262) — tests/test_binary_tokenizer.py diffs both
+    listings against the compiled reference binary's output.txt /
+    output2.txt.
 
     Difference by design (SURVEY.md §4): frequency ties are pinned to
     (cnt DESC, word ASC) where the reference is unstable-sort-unspecified.
@@ -46,5 +48,4 @@ def run_reference_pipeline(
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    write_count_listings(counts, out_dir)
-    return counts
+    return write_count_listings(counts, out_dir)

@@ -22,6 +22,8 @@ def test_reference_pipeline_roundtrip(spark, tmp_path):
     )
     out = str(tmp_path / "out")
     counts = run_reference_pipeline(spark, str(src), out)
+    # The counts come back materialized: no file scan is left in their plan.
+    assert counts.inputFiles() == []
     got = {r.word: r.cnt for r in counts.collect()}
     assert got == {
         "Hello": 2,
@@ -47,6 +49,64 @@ def test_reference_pipeline_roundtrip(spark, tmp_path):
     by_count = [r.value for r in spark.read.text(f"{out}/by_count").collect()]
     assert by_count[0] == BY_COUNT_HEADER  # reference src/main.cpp:262
     assert by_count[1] == "Hello -> 2"  # highest count first
+
+
+def test_reference_pipeline_jobs_inherit_job_group(spark, tmp_path):
+    """Both listing sinks run on worker threads; every job they start must
+    carry the caller's job group, so no job of the call is ungrouped and
+    the group holds the jobs of both text writes."""
+    src = tmp_path / "corpus.txt"
+    src.write_text("b a c\na b\nb\n", encoding="utf-8")
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    to_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        return {e.executionId(): e for e in to_java(sql_store.executionsList())}
+
+    bus.waitUntilEmpty()
+    ungrouped_before = set(sc.statusTracker().getJobIdsForGroup(None))
+    executions_before = set(executions())
+    sc.setJobGroup("wc-grp", "reference pipeline under a job group")
+    try:
+        run_reference_pipeline(spark, str(src), str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped_before
+    group_jobs = set(sc.statusTracker().getJobIdsForGroup("wc-grp"))
+    writes = [
+        e
+        for i, e in executions().items()
+        if i not in executions_before
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    assert len(writes) == 2
+    for e in writes:
+        write_jobs = set(to_java(e.jobs()).keySet())
+        assert write_jobs and write_jobs <= group_jobs
+
+
+def test_write_count_listings_raises_sink_error(spark, tmp_path, monkeypatch):
+    """A failure inside one sink's worker thread raises out of the call."""
+    from parallel_map_reduce_word_counter_for_one_machine_spark.operators import (
+        wordcount,
+    )
+
+    real = wordcount.listing_lines
+
+    def failing(counts, order_cols, header):
+        if header == wordcount.BY_COUNT_HEADER:
+            raise RuntimeError("by_count sink failed")
+        return real(counts, order_cols, header)
+
+    monkeypatch.setattr(wordcount, "listing_lines", failing)
+    counts = spark.createDataFrame([("a", 2), ("b", 1)], "word string, cnt long")
+    with pytest.raises(RuntimeError, match="by_count sink failed"):
+        wordcount.write_count_listings(counts, str(tmp_path / "out"))
 
 
 def test_stateful_user_totals_equals_batch(spark, sf_correct):
